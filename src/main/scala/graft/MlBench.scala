@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * shape that detonates naive quadratic candidate generation) — then
   * measures duplicateClusters, crossContamination, and the persisted
   * LSH index build/probe end-to-end, reporting the skew diagnostics
-  * (band-bucket max population, CC round count, pair counts) alongside
+  * (band-bucket max population, pair counts) alongside
   * the wall times. Results and conclusions live in BASELINE.md
   * ("Curation-layer soak").
   *

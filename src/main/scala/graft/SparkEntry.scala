@@ -1135,10 +1135,10 @@ object SparkEntry {
       // near-dup PAIRS -> connected components -> cluster roll-up: the
       // transitive-closure step real pipelines need between q24's pair
       // list and "keep one per group". The component labels come from
-      // iterative min-label propagation with pointer jumping
-      // (Dedup.connectedComponents — O(log n) rounds, |V|+|E| per
-      // round); the oracle recomputes them as a recursive-CTE
-      // transitive closure, so any propagation defect breaks the hash.
+      // a union-find over the collected pair graph
+      // (Dedup.connectedComponents); the oracle recomputes them as a
+      // recursive-CTE transitive closure, so any labeling defect
+      // breaks the hash.
       Dedup.duplicateClusters(pq(s, dir, "documents"), "text", "doc_id",
           numHashes = 4, bandSize = 1, shingleK = 3, minJaccardPct = 50)
         .groupBy(col("comp"))

@@ -74,11 +74,14 @@ object Tables {
 
   /** DuckDB CTE computing the merged islands of a table `src` per
     * `keyCols` (comma-joined column list) as `name(keyCols, istart, iend, n)`
-    * — the window-sweep merge, mirroring UnaryOps.merge. */
+    * — the window-sweep merge, mirroring UnaryOps.merge. Both windows
+    * order by (istart, iend, rn), with `rn` one row_number() computed
+    * once per partition: ordered by (istart, iend) alone, the two windows
+    * may order exact duplicates differently and split an island. */
   def mergeCte(name: String, src: String, keyCols: String,
                slack: Long = 0): String = {
     val k = keyCols
-    s"""$name AS (SELECT $k, min(istart) AS istart, max(iend) AS iend, count(*) AS n FROM (SELECT $k, istart, iend, sum(nf) OVER (PARTITION BY $k ORDER BY istart, iend ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cl FROM (SELECT $k, istart, iend, CASE WHEN pm IS NULL OR istart >= pm + $slack THEN 1 ELSE 0 END AS nf FROM (SELECT $k, istart, iend, max(iend) OVER (PARTITION BY $k ORDER BY istart, iend ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pm FROM $src))) GROUP BY $k, cl)"""
+    s"""$name AS (SELECT $k, min(istart) AS istart, max(iend) AS iend, count(*) AS n FROM (SELECT $k, istart, iend, sum(nf) OVER (PARTITION BY $k ORDER BY istart, iend, rn ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cl FROM (SELECT $k, istart, iend, rn, CASE WHEN pm IS NULL OR istart >= pm + $slack THEN 1 ELSE 0 END AS nf FROM (SELECT $k, istart, iend, rn, max(iend) OVER (PARTITION BY $k ORDER BY istart, iend, rn ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pm FROM (SELECT $k, istart, iend, row_number() OVER (PARTITION BY $k ORDER BY istart, iend) AS rn FROM $src)))) GROUP BY $k, cl)"""
   }
 
   /** Strand-aware 5'->3' cumsum CTE (mirror of UnaryOps.groupCumsum with

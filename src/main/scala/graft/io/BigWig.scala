@@ -291,8 +291,7 @@ object BigWig {
     var ok = false
     var secAgg: DataFrame = null
     // stage marks (GRAFT_BW_DEBUG=1): the write is a driver-paced
-    // multi-job pipeline, so wall attribution needs in-situ marks —
-    // the GRAFT_CC_DEBUG pattern
+    // multi-job pipeline, so wall attribution needs in-situ marks
     val dbg = sys.env.contains("GRAFT_BW_DEBUG")
     var tMark = System.nanoTime()
     def mark(what: String): Unit = if (dbg) {

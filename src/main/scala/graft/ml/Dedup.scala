@@ -1,7 +1,10 @@
 package graft.ml
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType, StructField, StructType}
 
 /** Deduplication operators for training-data pipelines: exact (hash
   * groupBy), MinHash + LSH banding, SimHash, and exact n-gram Jaccard
@@ -468,7 +471,7 @@ object Dedup {
     var remBits = bits - bits / bands
     val coldParts = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     // GRAFT_SIMHASH_DEBUG: per-level census prints for soak observation
-    // (the GRAFT_CC_DEBUG pattern) — extra count() jobs, so env-gated
+    // — extra count() jobs, so env-gated
     val debug = sys.env.contains("GRAFT_SIMHASH_DEBUG")
     var level = 0
     var done = false
@@ -525,131 +528,95 @@ object Dedup {
   }
 
   /** Connected components over an undirected pair graph (e.g. the
-    * near-duplicate pairs): returns one row per node that has at least
-    * one REAL edge — pairs that are self-loops or have a null endpoint
-    * are discarded first, so a node appearing only in such pairs gets
-    * no row. Each node is labeled with the smallest node id reachable
-    * from it — the canonical "keeper" of its duplicate cluster.
+    * near-duplicate pairs): returns (id, comp), one row per node with at
+    * least one REAL edge — self-loop and null-endpoint pairs are dropped
+    * first, so a node appearing only in such pairs gets no row. `comp`
+    * is the smallest id reachable from the node — the canonical
+    * "keeper" of its duplicate cluster. Both endpoint columns are read
+    * as one id type (the type their union widens to) and compared with
+    * that type's Spark ordering; `id` and `comp` are non-nullable.
     *
-    * Algorithm: iterative min-label propagation with pointer jumping.
-    * Each round every node takes the min of its own label, its
-    * neighbors' labels (one hash join + groupBy on the symmetrized edge
-    * table), and its label's label (one self-join — path halving). With
-    * the jumping step label distance to the component minimum at least
-    * halves per round, so convergence is O(log(longest path)) rounds,
-    * not O(diameter) — ~3 rounds for the near-clique clusters LSH
-    * produces, bounded for adversarial chains. Each round is two
-    * shuffles over data proportional to |V|+|E| (never materializes
-    * anything quadratic), the edge table is computed once and persisted,
-    * and each round's labels are localCheckpoint'ed so lineage stays
-    * constant-depth no matter how many rounds run — the standard
-    * map-reduce CC recipe (cf. Kiveris et al., "Connected Components in
-    * MapReduce and Beyond").
-    *
-    * Stops when a round changes no label (the previous label rides
-    * along in the checkpointed rows, so the probe is a limit-1 scan —
-    * driver-side iteration CONTROL, the labels themselves never leave
-    * the executors) or after `maxIter` rounds, whichever is first. */
+    * The real edges are collected in one job and labeled on the driver
+    * by a sequential union-find ([[localComponents]]), so the graph must
+    * fit the driver: `spark.driver.maxResultSize` bounds the collect,
+    * and 8M long-id pairs peaked under 5 GiB of heap. A dedup pair graph
+    * is far smaller than its corpus (~0.5 bucket-star pairs per doc in
+    * MlBench's skewed corpus), and at every measured size the union-find
+    * outran distributed min-label propagation, which also failed to
+    * converge on some graphs (BASELINE.md "Connected components"). */
   def connectedComponents(pairs: DataFrame, aCol: String = "a",
-                          bCol: String = "b", maxIter: Int = 30): DataFrame = {
+                          bCol: String = "b"): DataFrame = {
     val sess = pairs.sparkSession
-    // pin the pair list before symmetrizing: the union references
-    // `pairs` twice, and for a derived input (e.g. the LSH pipeline)
-    // inlining the plan twice doubles the most expensive stage of the
-    // whole operator. Checkpoint blocks (p0, edges, the per-round label
-    // snapshots) are released by the ContextCleaner when their RDD
-    // references are GC'd, not eagerly — bounded by the graph size
-    // times the round count, tiny relative to the corpus.
-    val dbg = sys.env.contains("GRAFT_CC_DEBUG")
-    var tMark = System.nanoTime()
-    def mark(what: String): Unit = if (dbg) {
-      val now = System.nanoTime()
-      System.err.println(f"[cc] $what: ${(now - tMark) / 1e9}%.2fs")
-      tMark = now
+    val idType = pairs.select(col(aCol)).union(pairs.select(col(bCol)))
+      .schema.head.dataType
+    val (s, d) = (col(aCol).cast(idType), col(bCol).cast(idType))
+    val edges = pairs.select(s, d)
+      .where(s.isNotNull && d.isNotNull && s =!= d)
+      .collect()
+    val labels = localComponents(edges, idType)
+    val outSchema = StructType(Seq(StructField("id", idType, nullable = false),
+      StructField("comp", idType, nullable = false)))
+    val slices = (labels.length + LabelsPerSlice - 1) / LabelsPerSlice
+    sess.createDataFrame(
+      sess.sparkContext.parallelize(labels, math.max(1, slices)), outSchema)
+  }
+
+  /** Labels per partition of the [[connectedComponents]] result. Each
+    * task carries its slice serialized, and 2^16 labels of ids up to
+    * ~1 KB stay under the default 128 MiB `spark.rpc.message.maxSize`. */
+  private val LabelsPerSlice = 1 << 16
+
+  /** The labels of [[connectedComponents]] from its collected real
+    * edges (non-null (s, d) rows with s != d). Nodes get dense indices;
+    * a union-find that always links the root with the larger id under
+    * the one with the smaller keeps every root at its component's
+    * minimum id, and `find` compresses paths by halving. Integral ids
+    * are indexed through a primitive hash map; any other id type is
+    * sorted with its Spark ordering, which makes index order id order. */
+  private def localComponents(edges: Array[Row], idType: DataType): IndexedSeq[Row] = {
+    // endpoint e is column e % 2 of edge e / 2
+    def end(e: Int): Any = edges(e >> 1).get(e & 1)
+    val ends = 2 * edges.length
+    // node(e): dense index of endpoint e; first(i): an endpoint of node
+    // i; less(i, j): node i's id orders before node j's
+    val node = new Array[Int](ends)
+    val first = new Array[Int](ends)
+    var nodes = 0
+    val less: (Int, Int) => Boolean = idType match {
+      case LongType | IntegerType | ShortType | ByteType =>
+        // no sort: sorting boxed keys, read in random heap order, took
+        // most of the time on large graphs (BASELINE.md)
+        val key = Array.tabulate(ends)(e => end(e).asInstanceOf[Number].longValue)
+        val index = new scala.collection.mutable.LongMap[Int]()
+        for (e <- 0 until ends)
+          node(e) = index.getOrElseUpdate(key(e), { first(nodes) = e; nodes += 1; nodes - 1 })
+        (i, j) => key(first(i)) < key(first(j))
+      case _ =>
+        val toKey = CatalystTypeConverters.createToCatalystConverter(idType)
+        val ord = TypeUtils.getInterpretedOrdering(idType)
+        val keys = Array.tabulate[Any](ends)(e => toKey(end(e)))
+        val byKey = Array.tabulate[Integer](ends)(Int.box)
+        java.util.Arrays.sort(byKey, (x: Integer, y: Integer) => ord.compare(keys(x), keys(y)))
+        for (k <- byKey.indices) {
+          if (k == 0 || ord.compare(keys(byKey(k - 1)), keys(byKey(k))) != 0) {
+            first(nodes) = byKey(k)
+            nodes += 1
+          }
+          node(byKey(k)) = nodes - 1
+        }
+        _ < _
     }
-    // localCheckpoint, NOT persist: a persisted plan pins its exchange
-    // layout (AQE may not re-coalesce cached plans), which ran the whole
-    // upstream pair pipeline at full shuffle width — measured 8-9 s vs
-    // 2-3 s for the same plan under AQE at sf0.1. The checkpoint
-    // materializes eagerly through normal AQE execution, truncates the
-    // lineage, and the self-union below reads the materialized RDD twice
-    // instead of inlining the expensive input plan twice.
-    val p0 = pairs.select(col(aCol).as("s"), col(bCol).as("d"))
-      .localCheckpoint()
-    val nPairs = p0.count()
-    mark(s"pairs ($nPairs)")
-    if (nPairs == 0) {
-      return p0.select(col("s").as("id"), col("s").as("comp"))
+    val parent = Array.range(0, nodes)
+    def find(x: Int): Int = {
+      var i = x
+      while (parent(i) != i) { parent(i) = parent(parent(i)); i = parent(i) }
+      i
     }
-    // The loop body runs eagerly (localCheckpoint + the convergence
-    // probe are actions), so scope the shuffle width to the graph for
-    // its whole duration — INCLUDING the edge build, so the cached edge
-    // partitioning matches the loop's and rounds don't re-exchange it:
-    // ~1M symmetrized edges per partition, floor 1. A dedup pair graph
-    // is orders of magnitude smaller than its corpus, and 32-partition
-    // shuffles over a few thousand labels make each round pure
-    // scheduling tax. At cluster scale nPairs drives the width back up.
-    // The width is scoped via a CLONED session (fresh SQLConf sharing
-    // the context, catalog, and p0's materialized blocks) — the
-    // caller's session conf is never touched, so a concurrent
-    // multi-tenant session cannot observe the narrowed width; the
-    // checkpointed rows cross sessions through createDataFrame and the
-    // result is rebound to the caller's session the same way.
-    val loopParts = math.max(1L, math.min(
-      sess.conf.get("spark.sql.shuffle.partitions").toLong,
-      (2 * nPairs + (1L << 20) - 1) / (1L << 20))).toString
-    val loopSess = sess.newSession()
-    loopSess.conf.set("spark.sql.shuffle.partitions", loopParts)
-    val labelsOut = {
-      val p0l = loopSess.createDataFrame(p0.rdd, p0.schema)
-      val edges = p0l
-        .union(p0l.select(col("d").as("s"), col("s").as("d")))
-        .where(col("s").isNotNull && col("d").isNotNull && col("s") =!= col("d"))
-        .distinct()
-        .localCheckpoint()
-      mark("edges")
-      var labels = edges.groupBy(col("s").as("id"))
-        .agg(min(col("d")).as("_m"))
-        .select(col("id"), least(col("id"), col("_m")).as("comp"))
-        .localCheckpoint()
-      mark("init labels")
-      var iter = 0
-      var converged = false
-      while (!converged && iter < maxIter) {
-        val viaNbr = edges.join(labels.withColumnRenamed("id", "s"), "s")
-          .groupBy(col("d").as("id")).agg(min(col("comp")).as("_nc"))
-        // carry the previous label (_oc) through, so convergence is a
-        // limit-1 scan of the freshly checkpointed rows instead of a
-        // join-shuffle job per round
-        val half = labels.join(viaNbr, Seq("id"), "left")
-          .select(col("id"),
-            least(col("comp"), coalesce(col("_nc"), col("comp"))).as("_c0"),
-            col("comp").as("_oc"))
-        val ptr = labels.select(col("id").as("_pid"), col("comp").as("_pc"))
-        val next = half
-          .join(ptr, half("_c0") === ptr("_pid"), "left")
-          .select(col("id"),
-            least(col("_c0"), coalesce(col("_pc"), col("_c0"))).as("comp"),
-            col("_oc"))
-          .localCheckpoint()
-        converged = next.where(col("comp") =!= col("_oc")).isEmpty
-        labels = next.select(col("id"), col("comp"))
-        iter += 1
-        mark(s"iter $iter (converged=$converged)")
-      }
-      if (!converged)
-        // surface truncation loudly: a maxIter-capped run can hand the
-        // keeper selection WRONG cluster labels, and nothing downstream
-        // can tell a converged labeling from a truncated one
-        System.err.println(s"[graft] WARNING: connectedComponents stopped " +
-          s"at maxIter=$maxIter WITHOUT converging — labels may be " +
-          "truncated (nodes labeled with a non-minimal component id); " +
-          "rerun with a larger maxIter")
-      labels
+    for (e <- node.indices by 2) {
+      val (ra, rb) = (find(node(e)), find(node(e + 1)))
+      if (ra != rb) { if (less(ra, rb)) parent(rb) = ra else parent(ra) = rb }
     }
-    // rebind to the caller's session so downstream plans run under the
-    // caller's own conf at full width
-    sess.createDataFrame(labelsOut.rdd, labelsOut.schema)
+    (0 until nodes).map(i => Row(end(first(i)), end(first(find(i)))))
   }
 
   /** Train/eval DECONTAMINATION: find (left, right) document pairs that
@@ -903,9 +870,7 @@ object Dedup {
       // it — repeated calls in a long-lived session no longer
       // accumulate block-manager storage. The intermediate
       // localCheckpoints (ex/edges/vp) lose their last reference here
-      // and are reclaimed by the ContextCleaner on GC. The downstream
-      // consumer (connectedComponents) iterates over these edges, so
-      // the checkpoint also saves it per-iteration recompute.
+      // and are reclaimed by the ContextCleaner on GC.
       val out = result.localCheckpoint()
       (if (useArrays) docArr else dsh).unpersist()
       out
@@ -946,7 +911,6 @@ object Dedup {
                         idCol: String = "doc_id", numHashes: Int = 4,
                         bandSize: Int = 1, shingleK: Int = 3,
                         minJaccardPct: Int = 50,
-                        maxIter: Int = 30,
                         strategy: String = "pairs",
                         secondChance: Boolean = true): DataFrame = {
     require(strategy == "pairs" || strategy == "buckets",
@@ -958,7 +922,7 @@ object Dedup {
       else
         nearDuplicateBucketEdges(docs, textCol, idCol, numHashes,
           bandSize, shingleK, minJaccardPct, secondChance)
-    connectedComponents(pairs, "a", "b", maxIter)
+    connectedComponents(pairs, "a", "b")
       .withColumnRenamed("id", idCol)
   }
 

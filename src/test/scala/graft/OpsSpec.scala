@@ -6,6 +6,7 @@ import graft.ml.{Dedup, Similarity, TextOps}
 import graft.ops.{BinaryOps, Coverage, UnaryOps}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Golden tests mirroring the reference's doctest examples (cited per
@@ -1071,6 +1072,53 @@ class OpsSpec extends AnyFunSuite {
         .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
       assert(got == unionFind(edges), s"mismatch on ${edges.take(5)}...")
     }
+  }
+
+  test("connectedComponents: string ids, repeated and reversed edges, dropped nodes, empty input, one schema") {
+    import spark.implicits._
+    val nil = null.asInstanceOf[String]
+    // "｡" (U+FF61) < "😀" (U+1F600) in UTF-8 byte order, which is
+    // Spark's string ordering; Java's UTF-16 String.compareTo says the
+    // reverse, so the labeling must compare with Spark's ordering
+    val strPairs = Seq(("b", "a"), ("a", "c"), ("c", "a"), ("a", "c"),
+      ("x", "y"), ("y", "x"), ("z", "z"), (nil, "w"), ("v", nil),
+      ("😀", "｡")).toDF("a", "b")
+    val strOut = graft.ml.Dedup.connectedComponents(strPairs)
+    assert(strOut.collect().map(r => (r.getString(0), r.getString(1))).toMap ==
+      Map("a" -> "a", "b" -> "a", "c" -> "a", "x" -> "x", "y" -> "x",
+        "｡" -> "｡", "😀" -> "｡"))
+    val longOut = graft.ml.Dedup.connectedComponents(
+      Seq((2L, 1L), (1L, 2L), (2L, 1L), (3L, 2L), (7L, 7L)).toDF("a", "b"))
+    assert(longOut.collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq ==
+      Seq(1L -> 1L, 2L -> 1L, 3L -> 1L))
+    // an int and a long endpoint column are read as one (long) id type
+    val mixedOut = graft.ml.Dedup.connectedComponents(
+      Seq((2, 1L), (3, 2L)).toDF("a", "b"))
+    assert(mixedOut.collect().map(r => (r.getLong(0), r.getLong(1))).toMap ==
+      Map(1L -> 1L, 2L -> 1L, 3L -> 1L))
+    val empty = graft.ml.Dedup.connectedComponents(
+      Seq.empty[(Long, Long)].toDF("a", "b"))
+    assert(empty.count() == 0)
+    def ids(t: DataType) = StructType(Seq(StructField("id", t, nullable = false),
+      StructField("comp", t, nullable = false)))
+    assert(Seq(strOut, longOut, mixedOut, empty).map(_.schema) ==
+      Seq(ids(StringType), ids(LongType), ids(LongType), ids(LongType)))
+  }
+
+  test("connectedComponents leaves no persisted block and slices large results") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val small = graft.ml.Dedup.connectedComponents(
+      Seq((5L, 3L), (3L, 7L), (9L, 7L), (20L, 21L)).toDF("a", "b"))
+    assert((sc.getPersistentRDDs.keySet -- before).isEmpty)
+    assert(small.count() == 6 && small.rdd.getNumPartitions == 1)
+    // 70,000 two-node components: 140,000 labels, 65,536 per slice
+    val big = graft.ml.Dedup.connectedComponents(spark.range(70000)
+      .select((col("id") * 2).as("a"), (col("id") * 2 + 1).as("b")))
+    assert(big.rdd.getNumPartitions == 3)
+    assert(big.where(col("comp") =!= col("id") - col("id") % 2).isEmpty)
+    assert(big.count() == 140000)
   }
 
   test("bm25TopTerms ranks rare terms above stop-words and respects topN") {
